@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: per-query wall times on SPARK_GRAFT_SF_DIR, emitted
   * INCREMENTALLY. A full warmup pass runs first on sf0.001 (JIT,
   * whole-stage-codegen compilation, parquet footer caching, shuffle service
@@ -154,28 +152,7 @@ object Bench {
     val fastBox = sys.env.get("SPARK_GRAFT_FAST_BOX")
       .map(_ == "1").getOrElse(calibScalar("start") <= 2.2)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // guide §3.1/§9: let the planner pick shuffled-hash over sort-merge
-      // when the per-partition build side fits (AQE partition sizing keeps
-      // build sides bounded) — skips the sort on both join inputs. Scale-
-      // neutral planner preferences, parameterised for A/B
-      // (SPARK_GRAFT_PREFER_SMJ=true restores the Spark default).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "67108864"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the repo's global windows are all bounded-by-construction (audited
-    // via graft.util.BoundedWindow — see its scaladoc); WindowExec's
-    // per-execution warning for them is noise that camouflaged real
-    // failures in round 4's bench tail
-    graft.util.BoundedWindow.silenceBoundedWindowWarning()
+    val spark = GraftSession.build(cpus)
 
     // noop sink: fully evaluates every output column (count() would let
     // Catalyst prune the projected expressions under count(*), silently

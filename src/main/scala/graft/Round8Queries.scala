@@ -170,7 +170,7 @@ object Round8Queries {
 
     // WOE as a PIPELINE stage through save -> load -> serve: one
     // encoder on each state kind (collected map + forced-distributed
-    // BigWoe lookup), so green means the fitted WOE state survives
+    // relation), so green means the fitted WOE state survives
     // persistence on both paths
     "q_persist_woe" -> ((s, d) => {
       val df = ordersLabeled(s, d)

@@ -67,7 +67,7 @@ object SparkEntry {
   /** 100-TB path twins (VERDICT r5 #1): same semantics as the small-path
     * twins, with thresholds forced down so the DISTRIBUTED branch — the
     * branch a 1000-executor job actually takes — runs under the DuckDB
-    * oracle: BigDict/BigFreq/big-target fitted-state joins instead of
+    * oracle: distributed FittedLookup relation joins instead of
     * collected literal maps, the binned percentileRank instead of the
     * broadcast window, and distributed min-label components instead of
     * driver union-find. A green row here means the big branch is

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,24 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same join-planner preferences as Bench (round 10): the oracle
-      // gate must verify the configuration the bench actually times
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "67108864"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the repo's global windows are all bounded-by-construction (audited
-    // via graft.util.BoundedWindow — see its scaladoc); WindowExec's
-    // per-execution warning for them is noise that camouflaged real
-    // failures in round 4's bench tail
-    graft.util.BoundedWindow.silenceBoundedWindowWarning()
+    val spark = GraftSession.build(cpus)
     new java.io.File(outDir).mkdirs()
     // dev-loop filter (same contract as Bench); the driver sets nothing
     // and gets the full dump

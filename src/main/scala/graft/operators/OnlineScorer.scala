@@ -11,12 +11,11 @@ import org.apache.spark.ml.{PipelineModel, Transformer}
   * stages once and returns a closure chain; row parity with batch
   * `model.transform` is asserted operator-by-operator in OnlineScorerSpec.
   *
-  * Scope: stages whose fitted state is driver-resident (SmallDict /
-  * SmallFreq / SmallTarget, scaler scalars, global aggregates, one-hot
-  * category lists, stateless string/map/hash transforms). A stage on its
-  * BIG path (distributed lookup relation) throws — at that cardinality the
-  * state doesn't fit a serving process and belongs behind `transform` or a
-  * streaming join ([[graft.streaming.Streaming.score]]).
+  * Scope: stages whose fitted state is driver-resident (encoder
+  * dictionaries held as driver maps, scaler scalars, global aggregates,
+  * one-hot category lists, stateless string/map/hash transforms). An
+  * encoder whose [[FittedLookup]] is a distributed relation throws
+  * [[NotDriverResidentException]].
   */
 object OnlineScorer {
   /** One serving row: column name → value (null for SQL NULL). */
@@ -61,18 +60,16 @@ object OnlineScorer {
     case _ => None
   }
 
+  private def name(stage: Transformer): String = stage.getClass.getSimpleName
+
   private def unsupported(stage: Transformer, why: String): Nothing =
     throw new UnsupportedOperationException(
-      s"OnlineScorer: ${stage.getClass.getSimpleName} — $why")
+      s"OnlineScorer: ${name(stage)} — $why")
 
   private def stageFn(stage: Transformer): OnlineRow => OnlineRow =
     stage match {
       case m: ComplementLabelEncoderModel =>
-        val dicts = m.dicts.map {
-          case SmallDict(mm, sc) => (mm, sc)
-          case _: BigDict =>
-            unsupported(m, "BigDict state is not driver-resident")
-        }
+        val dicts = m.dicts.map(_.driverMap(name(m))).zip(m.sentinelCodes)
         row => m.ins.zip(m.outs).zip(dicts).foldLeft(row) {
           case (r, ((in, out), (mm, sc))) =>
             val key = Option(r.getOrElse(in, null)).map(str)
@@ -81,11 +78,7 @@ object OnlineScorer {
         }
 
       case m: FrequencyEncoderModel =>
-        val dicts = m.dicts.map {
-          case SmallFreq(mm) => mm
-          case _: BigFreq =>
-            unsupported(m, "BigFreq state is not driver-resident")
-        }
+        val dicts = m.dicts.map(_.driverMap(name(m)))
         row => m.ins.zip(m.outs).zip(dicts).foldLeft(row) {
           case (r, ((in, out), mm)) =>
             val hit = Option(r.getOrElse(in, null))
@@ -142,11 +135,7 @@ object OnlineScorer {
       case m: TargetEncoderModel =>
         // serve path only (transformDF): all-data smoothed mean; the
         // leave-own-fold-out train path is a training-time construct
-        val fulls = m.states.map {
-          case SmallTarget(_, full) => full
-          case _: BigTarget =>
-            unsupported(m, "BigTarget state is not driver-resident")
-        }
+        val fulls = m.full.map(_.driverMap(name(m)))
         row => m.ins.zip(m.outs).zip(fulls).foldLeft(row) {
           case (r, ((in, out), full)) =>
             val v = Option(r.getOrElse(in, null))
@@ -155,11 +144,7 @@ object OnlineScorer {
         }
 
       case m: WoeEncoderModel =>
-        val maps = m.states.map {
-          case SmallWoe(woe) => woe
-          case _: BigWoe =>
-            unsupported(m, "BigWoe state is not driver-resident")
-        }
+        val maps = m.states.map(_.driverMap(name(m)))
         row => m.ins.zip(m.outs).zip(maps).foldLeft(row) {
           case (r, ((in, out), woe)) =>
             val v = Option(r.getOrElse(in, null))

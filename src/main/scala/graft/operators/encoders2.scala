@@ -103,27 +103,21 @@ class TargetEncoder(
         oof.as("__oof"), full.as("__full")).persist()
       val sizes = table.groupBy("__i").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val states: Seq[TargetState] = inputs.indices.map { i =>
-        val n = sizes.getOrElse(i, 0L)
+      val fits = inputs.indices.map { i =>
         val slice = table.filter(col("__i") === i)
-        if (n <= maxCollect) {
-          val rows = slice.collect()
-          SmallTarget(
-            rows.map(r => s"${r.getString(1)}\u0001${r.getLong(2)}" ->
-              r.getDouble(3)).toMap,
-            rows.groupBy(_.getString(1))
-              .map { case (v, rs) => v -> rs.head.getDouble(4) })
-        } else {
-          val lookup = slice
-            .select(col("__v").as("value"), col("__f").as("fold"),
-              col("__oof").as("oof"), col("__full").as("full"))
-            .persist()
-          lookup.count() // materialize before partials unpersist
-          BigTarget(lookup)
-        }
+          .select(col("__v").as("value"), col("__f").as("fold"),
+            col("__oof").as("oof"), col("__full").as("full"))
+        lazy val rows = slice.collect()
+        val fl = FittedLookup.fit[Double](sizes.getOrElse(i, 0L),
+          maxCollect)(rows.map(r => r.getString(0) -> r.getDouble(3)).toMap)(
+          slice)
+        (TargetEncoderModel.oofOf(fl, rows.map(r =>
+          s"${r.getString(0)}\u0001${r.getLong(1)}" -> r.getDouble(2)).toMap),
+          fl)
       }
       table.unpersist()
-      new TargetEncoderModel(inputs, outputs, idCol, nFolds, prior, states)
+      new TargetEncoderModel(inputs, outputs, idCol, nFolds, prior,
+        fits.map(_._1), fits.map(_._2))
     } finally { partials.unpersist(); () }
   }
 }
@@ -134,80 +128,56 @@ object TargetEncoder {
     pmod(GraftFunctions.md5_hash60(id.cast(StringType)), lit(nFolds.toLong))
 }
 
-sealed trait TargetState
-case class SmallTarget(oof: Map[String, Double],
-    full: Map[String, Double]) extends TargetState
-case class BigTarget(lookup: DataFrame) extends TargetState
-
+/** Per input: `oof` maps (value, fold) to the leave-own-fold-out
+  * encoding, `full` maps value to the all-data encoding. Distributed, both
+  * read one (value, fold, oof, full) relation. */
 class TargetEncoderModel(
     val ins: Seq[String],
     val outs: Seq[String],
     val idCol: String,
     val nFolds: Int,
     val prior: Double,
-    val states: Seq[TargetState])
+    val oof: Seq[FittedLookup[Double]],
+    val full: Seq[FittedLookup[Double]])
     extends GraftModel[TargetEncoderModel] {
 
   /** Serve path: all-data smoothed mean; unseen/null values → prior. */
   override def transformDF(df: DataFrame): DataFrame =
-    ins.zip(outs).zip(states).foldLeft(df) { case (d, ((in, out), st)) =>
-      val key = col(in).cast(StringType)
-      st match {
-        case SmallTarget(_, full) =>
-          Lookup.withLookup[Double](d, out, key, full, lit(prior),
-            _.cast(DoubleType), s"te_$out")
-        case BigTarget(lookup) =>
-          val l = lookup.select(col("value").as(s"__te_k_$out"),
-            col("full").as(s"__te_v_$out")).distinct()
-          d.join(l, key === col(s"__te_k_$out"), "left")
-            .withColumn(out,
-              coalesce(col(s"__te_v_$out"), lit(prior)).cast(DoubleType))
-            .drop(s"__te_k_$out", s"__te_v_$out")
-      }
+    ins.zip(outs).zip(full).foldLeft(df) { case (d, ((in, out), fl)) =>
+      FittedLookup.withLookup[Double](d, out, col(in).cast(StringType), fl,
+        lit(prior), _.cast(DoubleType), s"te_$out")
     }
 
   /** Train path: leave-own-fold-out encoding, keyed by (value, fold of
     * `idCol`). A (value, fold) pair absent from the fitted table (the
     * value never co-occurred with that fold in the fit data) falls back
-    * to the serve encoding, then to the prior. */
+    * to the serve encoding, then to the prior: a seen value whose rows
+    * all sit in OTHER folds has no (v, f) entry — its leave-f-out
+    * statistics ARE the full statistics. */
   def transformTrain(df: DataFrame): DataFrame =
-    ins.zip(outs).zip(states).foldLeft(df) { case (d, ((in, out), st)) =>
-      val v = col(in).cast(StringType)
-      val f = TargetEncoder.foldOf(col(idCol), nFolds)
-      st match {
-        case SmallTarget(oof, full) =>
-          val withOof = Lookup.withLookup[Double](d, s"__oof_$out",
-            concat(v, lit("\u0001"), f.cast(StringType)), oof, lit(null),
-            identity, s"teo_$out")
-          val done = Lookup.withLookup[Double](withOof, s"__full_$out",
-            v, full, lit(prior), identity, s"tef_$out")
-          done.withColumn(out,
-              coalesce(col(s"__oof_$out"), col(s"__full_$out"),
-                lit(prior)).cast(DoubleType))
-            .drop(s"__oof_$out", s"__full_$out")
-        case BigTarget(lookup) =>
-          // (value, fold) OOF join, then value-level full fallback (a
-          // seen value whose rows all sit in OTHER folds has no (v, f)
-          // entry — its leave-f-out statistics ARE the full statistics)
-          val l = lookup.select(col("value").as(s"__te_k_$out"),
-            col("fold").as(s"__te_f_$out"), col("oof").as(s"__te_o_$out"))
-          val lf = lookup.select(col("value").as(s"__te_j_$out"),
-            col("full").as(s"__te_u_$out")).distinct()
-          d.join(l, v === col(s"__te_k_$out") &&
-              f === col(s"__te_f_$out"), "left")
-            .join(lf, v === col(s"__te_j_$out"), "left")
-            .withColumn(out,
-              coalesce(col(s"__te_o_$out"), col(s"__te_u_$out"),
-                lit(prior)).cast(DoubleType))
-            .drop(s"__te_k_$out", s"__te_f_$out", s"__te_o_$out",
-              s"__te_j_$out", s"__te_u_$out")
-      }
+    ins.zip(outs).zip(oof.zip(full)).foldLeft(df) {
+      case (d, ((in, out), (ol, fl))) =>
+        val v = col(in).cast(StringType)
+        val f = TargetEncoder.foldOf(col(idCol), nFolds)
+        val (withOof, o, t1) = FittedLookup.attach(d,
+          concat(v, lit("\u0001"), f.cast(StringType)), Seq(v, f), ol,
+          s"teo_$out")
+        val (done, u, t2) = FittedLookup.attach(withOof, v, Seq(v), fl,
+          s"tef_$out")
+        done.withColumn(out,
+            coalesce(o, coalesce(u, lit(prior))).cast(DoubleType))
+          .drop(t1 ++ t2: _*)
     }
 }
 
-sealed trait WoeState
-case class SmallWoe(woe: Map[String, Double]) extends WoeState
-case class BigWoe(lookup: DataFrame) extends WoeState
+object TargetEncoderModel {
+  /** The (value, fold) lookup beside `full`: `local` when `full` is a
+    * driver map, else the (value, fold, oof) columns of its relation. */
+  private[operators] def oofOf(full: FittedLookup[Double],
+      local: => Map[String, Double]): FittedLookup[Double] =
+    FittedLookup(full.state.fold(_ => Left(local),
+      t => Right(t.select("value", "fold", "oof"))))
+}
 
 /** Weight-of-evidence categorical encoder as a PIPELINE stage — the
   * fitted-operator packaging of [[graft.relational.Scorecard.woeTable]]
@@ -218,10 +188,10 @@ case class BigWoe(lookup: DataFrame) extends WoeState
   * Fit: ONE corpus aggregate over all inputs at once (the TargetEncoder
   * posexplode discipline — inputs × rows explode carries only (i, value,
   * label)), totals per feature ride a window over the CARDINALITY-sized
-  * partials. Per-feature state follows the SmallDict/BigDict dual path:
-  * ≤ maxCollect distinct values collect to a driver map (literal-map or
-  * broadcast-join transform via Lookup), above that the lookup relation
-  * stays distributed and persists as parquet beside the pipeline JSON.
+  * partials. Per-feature state is a [[FittedLookup]]: ≤ maxCollect
+  * distinct values collect to a driver map, above that the lookup
+  * relation stays distributed and persists as parquet beside the
+  * pipeline JSON.
   *
   * Transform: unseen/null category → 0.0, WOE's no-information point
   * (the FrequencyEncoder unseen→default contract). */
@@ -260,18 +230,10 @@ class WoeEncoder(
         .select(col("__i"), col("__v"), woe.as("__woe")).persist()
       val sizes = table.groupBy("__i").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val states: Seq[WoeState] = inputs.indices.map { i =>
-        val slice = table.filter(col("__i") === i)
-        if (sizes.getOrElse(i, 0L) <= maxCollect)
-          SmallWoe(slice.collect()
-            .map(r => r.getString(1) -> r.getDouble(2)).toMap)
-        else {
-          val lookup = slice
-            .select(col("__v").as("value"), col("__woe").as("woe"))
-            .persist()
-          lookup.count() // materialize before partials unpersist
-          BigWoe(lookup)
-        }
+      val states = inputs.indices.map { i =>
+        FittedLookup.fit[Double](sizes.getOrElse(i, 0L), maxCollect,
+          table.filter(col("__i") === i)
+            .select(col("__v").as("value"), col("__woe").as("woe")))
       }
       table.unpersist()
       new WoeEncoderModel(inputs, outputs, states)
@@ -282,23 +244,12 @@ class WoeEncoder(
 class WoeEncoderModel(
     val ins: Seq[String],
     val outs: Seq[String],
-    val states: Seq[WoeState])
+    val states: Seq[FittedLookup[Double]])
     extends GraftModel[WoeEncoderModel] {
 
   override def transformDF(df: DataFrame): DataFrame =
     ins.zip(outs).zip(states).foldLeft(df) { case (d, ((in, out), st)) =>
-      val key = col(in).cast(StringType)
-      st match {
-        case SmallWoe(m) =>
-          Lookup.withLookup[Double](d, out, key, m, lit(0.0),
-            _.cast(DoubleType), s"woe_$out")
-        case BigWoe(lookup) =>
-          val l = lookup.select(col("value").as(s"__woe_k_$out"),
-            col("woe").as(s"__woe_v_$out"))
-          d.join(l, key === col(s"__woe_k_$out"), "left")
-            .withColumn(out,
-              coalesce(col(s"__woe_v_$out"), lit(0.0)).cast(DoubleType))
-            .drop(s"__woe_k_$out", s"__woe_v_$out")
-      }
+      FittedLookup.withLookup[Double](d, out, col(in).cast(StringType), st,
+        lit(0.0), _.cast(DoubleType), s"woe_$out")
     }
 }

@@ -4,62 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-private[operators] object Lookup {
-  /** Above this size a fitted dictionary is applied as a broadcast hash join
-    * of a lookup relation instead of a literal in-plan map —
-    * `element_at` on a literal `MapType` is a per-row linear scan, fine for
-    * small encoder dictionaries, wrong for high-cardinality keys
-    * (SURVEY §7.1.3). */
-  val LiteralMapMax = 1000
-
-  /** Apply `value -> result` dictionary to `key(in)`, null-free keys assumed
-    * handled by caller; misses become `default`. */
-  def withLookup[T: scala.reflect.runtime.universe.TypeTag](
-      df: DataFrame,
-      out: String,
-      key: Column,
-      m: Map[String, T],
-      default: Column,
-      finish: Column => Column,
-      tag: String): DataFrame = {
-    if (m.size <= LiteralMapMax) {
-      val hit =
-        if (m.isEmpty) lit(null)
-        else try_element_at(typedLit(m), key)
-      df.withColumn(out, finish(coalesce(hit, default)))
-    } else {
-      val spark = df.sparkSession
-      val k = s"__${tag}_k"
-      val v = s"__${tag}_v"
-      val enc = org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[(String, T)]()
-      val lookup = spark.createDataset(m.toSeq)(enc).toDF(k, v)
-      df.join(broadcast(lookup), key === col(k), "left")
-        .withColumn(out, finish(coalesce(col(v), default)))
-        .drop(k, v)
-    }
-  }
-
-  /** One distributed pass over `df` yielding the distinct (columnIndex,
-    * stringValue) pairs for all `cols` — a single shuffle fits every
-    * column's dictionary instead of one job per column. */
-  def distinctPairs(df: DataFrame, cols: Seq[String]): Array[Row] =
-    distinctPairsDF(df, cols).collect()
-
-  def distinctPairsDF(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(
-        posexplode(array(cols.map(c => col(c).cast(StringType)): _*))
-          .as(Seq("__i", "__v")))
-      .distinct()
-}
-
-/** A fitted per-column dictionary: driver-resident map for normal
-  * cardinalities, distributed lookup relation when the vocabulary is too
-  * large to collect (SCALE.md known-limit #1 — the 100 TB path). */
-sealed trait Dict extends Serializable
-case class SmallDict(m: Map[String, Int], sentinelCode: Int) extends Dict
-case class BigDict(lookup: DataFrame, sentinelCode: Int) extends Dict
-
 /** Label encoding with an always-present unseen/missing sentinel class.
   * Reference: dfpipeline/ComplementLabelEncoder.py:39-78.
   *
@@ -97,52 +41,47 @@ class ComplementLabelEncoder(
     val ins = GraftSchema.resolve(inputs, df)
     val outs = if (outputs.isEmpty) ins else outputs
     val S = ComplementLabelEncoder.Sentinel
-    val pairs = Lookup.distinctPairsDF(df, ins).persist()
+    val pairs = FittedLookup.distinctPairsDF(df, ins).persist()
     try {
       val sizes = pairs.groupBy("__i").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       val dicts = ins.indices.map { i =>
-        if (sizes.getOrElse(i, 0L) <= maxCollect) {
-          val vals = pairs.filter(col("__i") === i).collect()
+        val n = sizes.getOrElse(i, 0L)
+        val slice = pairs.filter(col("__i") === i)
+        val dict = FittedLookup.fit[Int](n, maxCollect) {
+          val vals = slice.collect()
             .map(r => if (r.isNullAt(1)) S else r.getString(1))
             .distinct.sorted
           val classes = if (vals.contains(S)) vals else vals :+ S
-          val m = classes.zipWithIndex.toMap
-          SmallDict(m, m(S))
-        } else {
+          classes.zipWithIndex.toMap
+        } {
           // 100 TB path: vocabulary never touches the driver. Missing/null
           // folds into the sentinel value; codes come from a distributed
           // sort + zipWithIndex (stable, matches the lexicographic
-          // contract); a training set with no missing values appends the
-          // sentinel AFTER the sorted classes (its code = vocab size, which
-          // is exactly what lookup misses default to at transform time).
-          // Cost note: zipWithIndex is inherently TWO jobs per big column
-          // (one to size the sorted partitions, one to stamp offsets) plus
-          // the hasMissing probe — the price of global contiguous codes
-          // without a driver round trip; the shared `pairs` cache keeps the
+          // contract). Cost note: zipWithIndex is inherently TWO jobs per
+          // big column (one to size the sorted partitions, one to stamp
+          // offsets) — the price of global contiguous codes without a
+          // driver round trip; the shared `pairs` cache keeps the
           // underlying distinct-scan at one pass for all columns.
-          val values = pairs.filter(col("__i") === i)
+          val sorted = slice
             .select(coalesce(col("__v"), lit(S)).as("value"))
-            .distinct()
-          val hasMissing = values.filter(col("value") === S).count() > 0
-          val sorted = values.sort("value")
-          val spark = df.sparkSession
-          val indexed = spark.createDataFrame(
+            .distinct().sort("value")
+          df.sparkSession.createDataFrame(
             sorted.rdd.zipWithIndex.map { case (r, idx) =>
               Row(r.getString(0), idx.toInt)
             },
             StructType(Seq(StructField("value", StringType),
               StructField("code", IntegerType))))
-            .persist()
-          val n = indexed.count() // materialize before pairs unpersists
-          val sentCode =
-            if (hasMissing)
-              indexed.filter(col("value") === S).head().getInt(1)
-            else n.toInt
-          BigDict(indexed, sentCode)
         }
+        // a training set with no missing values appends the sentinel
+        // AFTER the sorted classes: its code is the vocabulary size `n`,
+        // exactly what lookup misses default to at transform time
+        val sentinel = dict.state.fold(_(S), _.filter(col("value") === S)
+          .head(1).headOption.fold(n.toInt)(_.getInt(1)))
+        (dict, sentinel)
       }
-      new ComplementLabelEncoderModel(ins, outs, dicts)
+      new ComplementLabelEncoderModel(ins, outs, dicts.map(_._1),
+        dicts.map(_._2))
     } finally { pairs.unpersist(); () }
   }
 }
@@ -155,32 +94,16 @@ object ComplementLabelEncoder {
 class ComplementLabelEncoderModel(
     val ins: Seq[String],
     val outs: Seq[String],
-    val dicts: Seq[Dict])
+    val dicts: Seq[FittedLookup[Int]],
+    val sentinelCodes: Seq[Int])
     extends GraftModel[ComplementLabelEncoderModel] {
-  /** Small-dict maps (tests/persistence); throws on a BigDict column. */
-  def maps: Seq[Map[String, Int]] =
-    dicts.map { case SmallDict(m, _) => m
-                case _: BigDict => throw new IllegalStateException(
-                  "distributed dictionary has no driver-side map") }
-
   override def transformDF(df: DataFrame): DataFrame = {
     val S = ComplementLabelEncoder.Sentinel
-    ins.zip(outs).zip(dicts).foldLeft(df) { case (d, ((in, out), dict)) =>
-      val key = coalesce(col(in).cast(StringType), lit(S))
-      dict match {
-        case SmallDict(m, sentCode) =>
-          Lookup.withLookup[Int](d, out, key, m,
-            lit(sentCode), _.cast(IntegerType), s"cle_$out")
-        case BigDict(lookup, sentCode) =>
-          // no broadcast hint: the relation may be huge; AQE decides
-          val l = lookup.withColumnRenamed("value", s"__cle_k_$out")
-            .withColumnRenamed("code", s"__cle_v_$out")
-          d.join(l, key === col(s"__cle_k_$out"), "left")
-            .withColumn(out,
-              coalesce(col(s"__cle_v_$out"), lit(sentCode))
-                .cast(IntegerType))
-            .drop(s"__cle_k_$out", s"__cle_v_$out")
-      }
+    ins.zip(outs).zip(dicts.zip(sentinelCodes)).foldLeft(df) {
+      case (d, ((in, out), (dict, sentCode))) =>
+        FittedLookup.withLookup[Int](d, out,
+          coalesce(col(in).cast(StringType), lit(S)), dict,
+          lit(sentCode), _.cast(IntegerType), s"cle_$out")
     }
   }
 }
@@ -190,12 +113,9 @@ class ComplementLabelEncoderModel(
   * normalized by the column's non-null count. transform: value → count;
   * unseen values and nulls default to 1 (raw, long) or 0.0 (normalized,
   * double). One distributed groupBy pass fits every column's map.
+  * The fitted value is a double: exact for counts < 2^53, and the ratio
+  * for the normalized mode.
   */
-/** A fitted value→frequency dictionary (double: exact for counts < 2^53,
-  * and the ratio for the normalized mode). */
-sealed trait FreqDict extends Serializable
-case class SmallFreq(m: Map[String, Double]) extends FreqDict
-case class BigFreq(lookup: DataFrame) extends FreqDict
 
 class FrequencyEncoder(
     inputs: Seq[String],
@@ -227,22 +147,11 @@ class FrequencyEncoder(
         .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
       val dicts = inputs.indices.map { i =>
         val (n, total) = sizes.getOrElse(i, (0L, 0L))
-        if (n <= maxCollect) {
-          val rows = countsDF.filter(col("__i") === i).collect()
-          SmallFreq(
-            if (normalize)
-              rows.map(r => r.getString(1) -> r.getLong(2) / total.toDouble)
-                .toMap
-            else rows.map(r => r.getString(1) -> r.getLong(2).toDouble).toMap)
-        } else {
-          // 100 TB path: the frequency table stays distributed
-          val v = if (normalize) col("__c") / lit(total.toDouble)
-                  else col("__c").cast(DoubleType)
-          val lookup = countsDF.filter(col("__i") === i)
-            .select(col("__v").as("value"), v.as("freq")).persist()
-          lookup.count() // materialize before countsDF unpersists
-          BigFreq(lookup)
-        }
+        val v = if (normalize) col("__c") / lit(total.toDouble)
+                else col("__c").cast(DoubleType)
+        FittedLookup.fit[Double](n, maxCollect, countsDF
+          .filter(col("__i") === i)
+          .select(col("__v").as("value"), v.as("freq")))
       }
       new FrequencyEncoderModel(inputs, outputs, normalize, dicts)
     } finally { countsDF.unpersist(); () }
@@ -253,30 +162,13 @@ class FrequencyEncoderModel(
     val ins: Seq[String],
     val outs: Seq[String],
     val normalize: Boolean,
-    val dicts: Seq[FreqDict])
+    val dicts: Seq[FittedLookup[Double]])
     extends GraftModel[FrequencyEncoderModel] {
-  def maps: Seq[Map[String, Double]] =
-    dicts.map { case SmallFreq(m) => m
-                case _: BigFreq => throw new IllegalStateException(
-                  "distributed frequency table has no driver-side map") }
-
   override def transformDF(df: DataFrame): DataFrame =
     ins.zip(outs).zip(dicts).foldLeft(df) { case (d, ((in, out), dict)) =>
-      val key = col(in).cast(StringType)
-      val default = if (normalize) lit(0.0) else lit(1.0)
-      val finish: Column => Column =
-        if (normalize) _.cast(DoubleType) else _.cast(LongType)
-      dict match {
-        case SmallFreq(m) =>
-          Lookup.withLookup[Double](d, out, key, m, default, finish,
-            s"fe_$out")
-        case BigFreq(lookup) =>
-          val l = lookup.withColumnRenamed("value", s"__fe_k_$out")
-            .withColumnRenamed("freq", s"__fe_v_$out")
-          d.join(l, key === col(s"__fe_k_$out"), "left")
-            .withColumn(out, finish(coalesce(col(s"__fe_v_$out"), default)))
-            .drop(s"__fe_k_$out", s"__fe_v_$out")
-      }
+      FittedLookup.withLookup[Double](d, out, col(in).cast(StringType), dict,
+        if (normalize) lit(0.0) else lit(1.0),
+        if (normalize) _.cast(DoubleType) else _.cast(LongType), s"fe_$out")
     }
 }
 
@@ -677,7 +569,7 @@ class OneHotEncoder(columns: Seq[String])
   private[operators] def fuseCols: Seq[String] = columns
 
   override def fitDF(df: DataFrame): OneHotEncoderModel = {
-    val byCol = Lookup.distinctPairs(df, columns).groupBy(_.getInt(0))
+    val byCol = FittedLookup.distinctPairs(df, columns).groupBy(_.getInt(0))
     val cats = columns.indices.map { i =>
       byCol.getOrElse(i, Array.empty[Row])
         .filterNot(_.isNullAt(1)).map(_.getString(1)).distinct.sorted.toSeq

@@ -36,7 +36,7 @@ import scala.collection.mutable.ArrayBuffer
   * only on string keys (their fit groups by the RAW key; the fused scan
   * groups by the stringified key — identical only when the key is already a
   * string), and a fused vocabulary falling above `maxCollect` falls back to
-  * the stages' own fits (which then take their distributed BigDict paths).
+  * the stages' own fits (which then take their distributed-lookup paths).
   */
 object FitFusion {
   /** Fusable-fit descriptor for one estimator. */
@@ -185,7 +185,7 @@ object FitFusion {
         fuseKeyed(df, key, parts.map(_._1)) match {
           case Some(ms) =>
             parts.map(_._2).zip(ms).foreach { case (i, m) => models(i) = m }
-          case None => // vocabulary overflow → per-stage fits (BigDict path)
+          case None => // vocabulary overflow → per-stage fits (distributed lookups)
             parts.foreach { case (p, i) => models(i) = fitOne(p.stage, df) }
         }
       } else parts.foreach { case (p, i) => models(i) = fitOne(p.stage, df) }
@@ -248,14 +248,15 @@ object FitFusion {
           val classes = if (vals.contains(S)) vals else vals :+ S
           val m = classes.zipWithIndex.toMap
           new ComplementLabelEncoderModel(ins, outs,
-            Seq(SmallDict(m, m(S))))
+            Seq(FittedLookup(Left(m))), Seq(m(S)))
         case e: FrequencyEncoder =>
           val (ins, outs, normalize, _) = e.fuseInfo
           val m = nonNull.map { r =>
             r.getString(0) -> (if (normalize) r.getLong(1) / total.toDouble
                                else r.getLong(1).toDouble)
           }.toMap
-          new FrequencyEncoderModel(ins, outs, normalize, Seq(SmallFreq(m)))
+          new FrequencyEncoderModel(ins, outs, normalize,
+            Seq(FittedLookup(Left(m))))
         case e: OneHotEncoder =>
           new OneHotEncoderModel(e.fuseCols,
             Seq(nonNull.map(_.getString(0)).distinct.sorted.toSeq))

@@ -41,6 +41,18 @@ object GraftPersistence {
     case _          => None
   }
 
+  private def arr(j: JValue): List[JValue] = j.asInstanceOf[JArray].arr
+  private def num(j: JValue): Double = optD(j).getOrElse(
+    throw new IllegalArgumentException(j.toString))
+
+  /** One stage's fitted lookups; a distributed one goes to `<rel>_<j>`. */
+  private def lookupsJson[T](ls: Seq[FittedLookup[T]], field: String,
+      path: String, rel: String,
+      extras: Seq[List[JField]] = Seq.empty)(enc: T => JValue): JArray =
+    jarr(ls.zipWithIndex.map { case (l, j) =>
+      FittedLookup.toJson(l, field, path, s"${rel}_$j",
+        extras.lift(j).getOrElse(Nil))(enc) })
+
   private def stageToJson(
       st: Transformer, idx: Int, path: String): JObject = st match {
     case t: ColumnSelector => JObject(
@@ -97,31 +109,13 @@ object GraftPersistence {
     case m: ComplementLabelEncoderModel => JObject(
       "type" -> JString("ComplementLabelEncoderModel"),
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
-      "dicts" -> jarr(m.dicts.zipWithIndex.map {
-        case (SmallDict(mm, sent), _) => JObject(
-          "kind" -> JString("small"), "sentinelCode" -> JInt(sent),
-          "m" -> JObject(mm.toList.map { case (k, v) =>
-            k -> (JInt(v): JValue) }))
-        case (BigDict(lookup, sent), j) =>
-          val rel = s"data/${idx}_cle_$j"
-          lookup.write.mode("overwrite").parquet(s"$path/$rel")
-          JObject("kind" -> JString("big"), "sentinelCode" -> JInt(sent),
-            "path" -> JString(rel))
-      }))
+      "dicts" -> lookupsJson(m.dicts, "m", path, s"data/${idx}_cle",
+        m.sentinelCodes.map(c => List("sentinelCode" -> JInt(c))))(JInt(_)))
     case m: FrequencyEncoderModel => JObject(
       "type" -> JString("FrequencyEncoderModel"),
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
       "normalize" -> JBool(m.normalize),
-      "dicts" -> jarr(m.dicts.zipWithIndex.map {
-        case (SmallFreq(mm), _) => JObject(
-          "kind" -> JString("small"),
-          "m" -> JObject(mm.toList.map { case (k, v) =>
-            k -> (JDouble(v): JValue) }))
-        case (BigFreq(lookup), j) =>
-          val rel = s"data/${idx}_fe_$j"
-          lookup.write.mode("overwrite").parquet(s"$path/$rel")
-          JObject("kind" -> JString("big"), "path" -> JString(rel))
-      }))
+      "dicts" -> lookupsJson(m.dicts, "m", path, s"data/${idx}_fe")(JDouble))
     case m: ScalerModel => JObject(
       "type" -> JString("ScalerModel"),
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
@@ -173,33 +167,17 @@ object GraftPersistence {
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
       "idCol" -> JString(m.idCol), "nFolds" -> JInt(m.nFolds),
       "prior" -> JDouble(m.prior),
-      "states" -> jarr(m.states.zipWithIndex.map {
-        case (SmallTarget(oof, full), _) => JObject(
-          "kind" -> JString("small"),
-          // oof keys embed the  (value, fold) separator — JSON
-          // string escaping round-trips control chars faithfully
-          "oof" -> JObject(oof.toList.map { case (k, v) =>
-            k -> (JDouble(v): JValue) }),
-          "full" -> JObject(full.toList.map { case (k, v) =>
-            k -> (JDouble(v): JValue) }))
-        case (BigTarget(lookup), jx) =>
-          val rel = s"data/${idx}_te_$jx"
-          lookup.write.mode("overwrite").parquet(s"$path/$rel")
-          JObject("kind" -> JString("big"), "path" -> JString(rel))
-      }))
+      // oof keys embed the \u0001 (value, fold) separator — JSON string
+      // escaping round-trips control chars faithfully; a distributed
+      // `full` relation carries the oof column too
+      "states" -> lookupsJson(m.full, "full", path, s"data/${idx}_te",
+        m.oof.map(_.state.fold(o => List("oof" -> FittedLookup.mapToJson(o)(
+          JDouble)), _ => Nil)))(JDouble))
     case m: WoeEncoderModel => JObject(
       "type" -> JString("WoeEncoderModel"),
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
-      "states" -> jarr(m.states.zipWithIndex.map {
-        case (SmallWoe(woe), _) => JObject(
-          "kind" -> JString("small"),
-          "woe" -> JObject(woe.toList.map { case (k, v) =>
-            k -> (JDouble(v): JValue) }))
-        case (BigWoe(lookup), jx) =>
-          val rel = s"data/${idx}_woe_$jx"
-          lookup.write.mode("overwrite").parquet(s"$path/$rel")
-          JObject("kind" -> JString("big"), "path" -> JString(rel))
-      }))
+      "states" -> lookupsJson(m.states, "woe", path, s"data/${idx}_woe")(
+        JDouble))
     case t: FunctionTransformer if t.op.nonEmpty => JObject(
       "type" -> JString("FunctionTransformer"),
       "inputs" -> jarr(t.inputs.map(jstrs)),
@@ -232,6 +210,8 @@ object GraftPersistence {
   private def stageFromJson(
       j: JValue, spark: SparkSession, path: String): Transformer = {
     val JString(tpe) = j \ "type"
+    def lookups[T](v: JValue, field: String)(dec: JValue => T) =
+      arr(v).map(FittedLookup.fromJson(_, field, spark, path)(dec))
     def o(field: String): Option[JValue] = j \ field match {
       case JNothing => None
       case x        => Some(x)
@@ -281,35 +261,13 @@ object GraftPersistence {
           (j \ "useAllElements").asInstanceOf[JBool].value)
       case "ComplementLabelEncoderModel" =>
         new ComplementLabelEncoderModel(strs(j \ "ins"), strs(j \ "outs"),
-          (j \ "dicts").asInstanceOf[JArray].arr.map { d =>
-            val JInt(sent) = d \ "sentinelCode"
-            d \ "kind" match {
-              case JString("small") => SmallDict(
-                (d \ "m").asInstanceOf[JObject].obj.map { case (k, v) =>
-                  k -> v.asInstanceOf[JInt].num.toInt }.toMap,
-                sent.toInt)
-              case _ => BigDict(
-                spark.read.parquet(
-                  s"$path/${(d \ "path").asInstanceOf[JString].s}"),
-                sent.toInt)
-            }
-          })
+          lookups(j \ "dicts", "m")(_.asInstanceOf[JInt].num.toInt),
+          arr(j \ "dicts").map(d =>
+            (d \ "sentinelCode").asInstanceOf[JInt].num.toInt))
       case "FrequencyEncoderModel" =>
         new FrequencyEncoderModel(strs(j \ "ins"), strs(j \ "outs"),
           (j \ "normalize").asInstanceOf[JBool].value,
-          (j \ "dicts").asInstanceOf[JArray].arr.map { d =>
-            d \ "kind" match {
-              case JString("small") => SmallFreq(
-                (d \ "m").asInstanceOf[JObject].obj.map { case (k, v) =>
-                  k -> (v match {
-                    case JDouble(x) => x
-                    case JInt(i)    => i.toDouble
-                    case x => throw new IllegalArgumentException(x.toString)
-                  }) }.toMap)
-              case _ => BigFreq(spark.read.parquet(
-                s"$path/${(d \ "path").asInstanceOf[JString].s}"))
-            }
-          })
+          lookups(j \ "dicts", "m")(num))
       case "ScalerModel" =>
         new ScalerModel(strs(j \ "ins"), strs(j \ "outs"),
           (j \ "strategy").asInstanceOf[JString].s,
@@ -358,43 +316,18 @@ object GraftPersistence {
           (j \ "nBuckets").asInstanceOf[JInt].num.toInt,
           (j \ "scale").asInstanceOf[JInt].num.toLong)
       case "TargetEncoderModel" =>
-        def dmap(v: JValue): Map[String, Double] =
-          v.asInstanceOf[JObject].obj.map { case (k, x) =>
-            k -> (x match {
-              case JDouble(d) => d
-              case JInt(i)    => i.toDouble
-              case other => throw new IllegalArgumentException(other.toString)
-            })
-          }.toMap
+        val full = lookups(j \ "states", "full")(num)
         new TargetEncoderModel(strs(j \ "ins"), strs(j \ "outs"),
           (j \ "idCol").asInstanceOf[JString].s,
           (j \ "nFolds").asInstanceOf[JInt].num.toInt,
           (j \ "prior").asInstanceOf[JDouble].num,
-          (j \ "states").asInstanceOf[JArray].arr.map { st =>
-            st \ "kind" match {
-              case JString("small") =>
-                SmallTarget(dmap(st \ "oof"), dmap(st \ "full"))
-              case _ => BigTarget(spark.read.parquet(
-                s"$path/${(st \ "path").asInstanceOf[JString].s}"))
-            }
-          })
+          full.zip(arr(j \ "states")).map { case (f, st) =>
+            TargetEncoderModel.oofOf(f,
+              FittedLookup.mapFromJson(st \ "oof")(num)) },
+          full)
       case "WoeEncoderModel" =>
-        def wmap(v: JValue): Map[String, Double] =
-          v.asInstanceOf[JObject].obj.map { case (k, x) =>
-            k -> (x match {
-              case JDouble(d) => d
-              case JInt(i)    => i.toDouble
-              case other => throw new IllegalArgumentException(other.toString)
-            })
-          }.toMap
         new WoeEncoderModel(strs(j \ "ins"), strs(j \ "outs"),
-          (j \ "states").asInstanceOf[JArray].arr.map { st =>
-            st \ "kind" match {
-              case JString("small") => SmallWoe(wmap(st \ "woe"))
-              case _ => BigWoe(spark.read.parquet(
-                s"$path/${(st \ "path").asInstanceOf[JString].s}"))
-            }
-          })
+          lookups(j \ "states", "woe")(num))
       case "FunctionTransformer" =>
         FunctionTransformer.fromOp(
           (j \ "inputs").asInstanceOf[JArray].arr.map(strs),

@@ -331,23 +331,7 @@ object Graph {
     var round = 1
     var done = false
     while (round <= rounds && !done) {
-      val votes = e.join(graft.util.Joins.maybeBroadcast(
-          labels.withColumnRenamed("node", "s"), nNodes), "s")
-        .select(col("d").as("node"), col("label"))
-        .union(labels)
-      // per-node argmax as a second AGGREGATE, not a window (round 10,
-      // guide §2.4/§4): min(struct(-cnt, label)) realizes the identical
-      // (cnt DESC, label ASC) total order — struct comparison is
-      // field-lexicographic and Spark string order is bytewise, the same
-      // order the row_number window sorted by — but the aggregate is
-      // map-side combined, whole-stage-codegen'd, and skips the window's
-      // per-node sort (WindowExec is not codegen'd). Plan: Sort+Window →
-      // partial/final HashAggregate; one exchange either way.
-      val next = votes
-        .groupBy("node", "label").agg(count(lit(1)).as("__cnt"))
-        .groupBy("node").agg(min(struct((-col("__cnt")).as("nc"),
-          col("label").as("label"))).as("__best"))
-        .select(col("node"), col("__best.label").as("label"))
+      val next = labelPropagationRound(e, labels, nNodes)
         .localCheckpoint(true)
       // fixpoint: a round that changes nothing leaves every later
       // round identical (the vote inputs are a pure function of the
@@ -366,6 +350,31 @@ object Graph {
     }
     e.unpersist(blocking = false)
     labels.withColumnRenamed("label", "community")
+  }
+
+  /** One synchronous [[labelPropagation]] vote round: every node of the
+    * symmetrized edge relation `e` (s, d) adopts the most frequent label
+    * among its neighbors' `labels` (node, label; `nNodes` rows) plus its
+    * own, ties to the smallest label. */
+  private[graft] def labelPropagationRound(e: DataFrame, labels: DataFrame,
+      nNodes: Long): DataFrame = {
+    val votes = e.join(graft.util.Joins.maybeBroadcast(
+        labels.withColumnRenamed("node", "s"), nNodes), "s")
+      .select(col("d").as("node"), col("label"))
+      .union(labels)
+    // per-node argmax as a second AGGREGATE, not a window (round 10,
+    // guide §2.4/§4): min(struct(-cnt, label)) realizes the identical
+    // (cnt DESC, label ASC) total order — struct comparison is
+    // field-lexicographic and Spark string order is bytewise, the same
+    // order the row_number window sorted by — but the aggregate is
+    // map-side combined, whole-stage-codegen'd, and skips the window's
+    // per-node sort (WindowExec is not codegen'd). Plan: Sort+Window →
+    // partial/final HashAggregate; one exchange either way.
+    votes
+      .groupBy("node", "label").agg(count(lit(1)).as("__cnt"))
+      .groupBy("node").agg(min(struct((-col("__cnt")).as("nc"),
+        col("label").as("label"))).as("__best"))
+      .select(col("node"), col("__best.label").as("label"))
   }
 
   /** Generated label-propagation oracle: the identical deterministic

@@ -572,7 +572,7 @@ object Dedup {
     * `pairs` are labeled (isolated docs are their own component
     * trivially); ids must be integral.
     *
-    * Two paths, same contract as the SmallDict/BigDict encoders: a pair
+    * Two paths, same contract as the encoders' FittedLookup: a pair
     * list at or under `maxCollect` rows is solved driver-side with
     * union-find straight off the raw pairs — no symmetrize, no distinct,
     * zero shuffles (verified duplicate pairs are rare by construction —

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
 /** Broadcast gating for relations whose EXACT row count the caller
-  * already holds — the iterative-loop sibling of the SmallDict/BigDict
-  * fit-time decision.
+  * already holds — the iterative-loop sibling of the encoders'
+  * FittedLookup fit-time decision.
   *
   * The iterative operators (PageRank, BFS, k-core, label propagation,
   * distributed components) join a persisted EDGE relation against a
@@ -27,14 +27,26 @@ import org.apache.spark.sql.functions.broadcast
   */
 object Joins {
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Max rows to broadcast-hint; env-overridable for cluster tuning
     * (`SPARK_GRAFT_BCAST_MAX_ROWS`). Default 1M rows ≈ tens of MB for
     * the (string node, long) relations the loops carry — comfortably
     * under the guide's "few hundred MB is usually fine" and far under
     * the 8 GB / 512M-row broadcast hard cap. */
-  val DefaultMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_BCAST_MAX_ROWS").map(_.toLong)
-      .getOrElse(1000000L)
+  val DefaultMaxRows: Long = parseMaxRows(
+    sys.env.get("SPARK_GRAFT_BCAST_MAX_ROWS"))
+
+  /** The env value as a positive row count. A malformed or non-positive
+    * value falls back to 1M with a warning naming the variable, instead
+    * of failing this object's initialization (an
+    * `ExceptionInInitializerError` on the first graph or dedup call). */
+  private[graft] def parseMaxRows(raw: Option[String]): Long =
+    raw.fold(1000000L)(v => v.trim.toLongOption.filter(_ > 0).getOrElse {
+      log.warn(s"SPARK_GRAFT_BCAST_MAX_ROWS=$v is not a positive row " +
+        "count; using 1000000")
+      1000000L
+    })
 
   /** Broadcast-hint `df` iff its exact `rows` count is ≤ `maxRows`. */
   def maybeBroadcast(df: DataFrame, rows: Long,

@@ -17,7 +17,8 @@ class ComplementLabelEncoderSpec extends SparkSpec {
   test("no-null fit appends sentinel at END (ComplementLabelEncoder.py:61-63)") {
     val train = Seq((1L, "a"), (2L, "zz")).toDF("row_id", "col1")
     val m = new ComplementLabelEncoder(Seq("col1"), Seq("col1")).fit(train)
-    assert(m.maps.head == Map("a" -> 0, "zz" -> 1, "extra_category_" -> 2))
+    assert(m.dicts.head.driverMap("cle") ==
+      Map("a" -> 0, "zz" -> 1, "extra_category_" -> 2))
     // unseen value at serve time collapses to the sentinel code
     val serve = Seq((1L, "a"), (2L, "UNSEEN")).toDF("row_id", "col1")
     assertCol(m.transform(serve), "col1", Seq(0, 2))
@@ -27,7 +28,8 @@ class ComplementLabelEncoderSpec extends SparkSpec {
       .toDF("row_id", "col1")
     val m = new ComplementLabelEncoder(Seq("col1"), Seq("col1")).fit(train)
     // sorted: a < extra_category_ < zz
-    assert(m.maps.head == Map("a" -> 0, "extra_category_" -> 1, "zz" -> 2))
+    assert(m.dicts.head.driverMap("cle") ==
+      Map("a" -> 0, "extra_category_" -> 1, "zz" -> 2))
   }
   test("empty inputs = the reference's _PARM_ALL: encode every column in place") {
     // DFPBase.py:25-33 / ComplementLabelEncoder.py:41-42 — inputs/outputs
@@ -45,7 +47,7 @@ class ComplementLabelEncoderSpec extends SparkSpec {
     val m = new ComplementLabelEncoder(Seq("col1"), Seq("col1")).fit(train)
     // Python sorted(): 'abc' < 'extra_category_'? no — fit appends sentinel
     // last (no nulls): sorted values abc < Übung(Ü=0xDC) < été < 中文
-    assert(m.maps.head ==
+    assert(m.dicts.head.driverMap("cle") ==
       Map("abc" -> 0, "Übung" -> 1, "été" -> 2, "中文" -> 3,
         "extra_category_" -> 4))
   }

@@ -111,13 +111,13 @@ class FusionSpec extends SparkSpec {
     assertColApprox(fused, "ik_mean", Seq(Some(2.0), Some(2.0), Some(5.0)))
   }
 
-  test("vocabulary overflow falls back to per-stage (BigDict) fits") {
+  test("vocabulary overflow falls back to per-stage (distributed) fits") {
     val df = train
     val stages = Seq(
       new ComplementLabelEncoder(Seq("k"), Seq("k_code"), maxCollect = 0L),
       new FrequencyEncoder(Seq("k"), Seq("k_freq")))
     val fused = DFPipeline(stages: _*).fit(df).transform(df)
-    // BigDict codes are still lexicographic: a→0, b→1, c→2, sentinel→3? no —
+    // distributed codes are still lexicographic: a→0, b→1, c→2, sentinel→3? no —
     // nulls WERE seen, so sentinel sorts among values: a,b,c,extra_category_
     assertCol(fused, "k_code", Seq(0, 0, 1, 3, 2, 1))
     assertCol(fused, "k_freq", Seq(2L, 2L, 2L, 1L, 1L, 2L))

@@ -144,4 +144,14 @@ class GraphSpec extends SparkSpec {
       assert(kcore(edges, k) == expect, s"trial $trial k=$k")
     }
   }
+
+  test("SPARK_GRAFT_BCAST_MAX_ROWS: positive counts parse, anything else " +
+      "falls back to 1M instead of failing initialization") {
+    import graft.util.Joins.parseMaxRows
+    assert(parseMaxRows(None) == 1000000L)
+    assert(parseMaxRows(Some("250000")) == 250000L)
+    assert(parseMaxRows(Some(" 42 ")) == 42L)
+    for (bad <- Seq("", "1e6", "ten", "0", "-5", "99999999999999999999"))
+      assert(parseMaxRows(Some(bad)) == 1000000L, bad)
+  }
 }

@@ -101,7 +101,7 @@ class OnlineScorerSpec extends SparkSpec {
     val model = DFPipeline(
       new ComplementLabelEncoder(Seq("c_mktsegment"), Seq("seg_code"),
         maxCollect = 2)).fit(customer)
-    intercept[UnsupportedOperationException] {
+    intercept[NotDriverResidentException] {
       OnlineScorer.compile(model)
     }
   }

@@ -78,7 +78,7 @@ class PersistenceSpec extends SparkSpec {
   test("target + hashing encoders survive save/load (small and big state)") {
     val df = (1L to 40L).map(i =>
       (i, if (i % 3 == 0) "a" else "b", i.toDouble)).toDF("id", "c", "y")
-    for (maxCollect <- Seq(1000000L, 0L)) { // literal-map AND BigTarget
+    for (maxCollect <- Seq(1000000L, 0L)) { // literal-map AND distributed
       val model = DFPipeline(
         new TargetEncoder(Seq("c"), Seq("c_te"), "y", "id",
           nFolds = 3, smoothing = 5.0, maxCollect = maxCollect),

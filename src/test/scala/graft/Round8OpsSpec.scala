@@ -459,7 +459,7 @@ class Round8PlanSpec extends SparkSpec {
 }
 
 /** WOE as a pipeline stage: fit/transform parity with the table fn, the
-  * SmallWoe/BigWoe dual path, save → load → serve, and online scoring. */
+  * driver-map/distributed dual path, save → load → serve, and online scoring. */
 class WoeEncoderOpSpec extends SparkSpec {
   import spark.implicits._
   import graft.operators._
@@ -485,12 +485,12 @@ class WoeEncoderOpSpec extends SparkSpec {
     assert(unseen.getDouble(unseen.fieldIndex("cat_woe")) == 0.0)
   }
 
-  test("BigWoe forced path (maxCollect = 0) is value-identical to the " +
-      "collected path") {
+  test("distributed forced path (maxCollect = 0) is value-identical to " +
+      "the collected path") {
     val small = new WoeEncoder(Seq("cat"), Seq("w"), "y").fit(df)
     val big = new WoeEncoder(Seq("cat"), Seq("w"), "y",
       maxCollect = 0).fit(df)
-    assert(big.states.head.isInstanceOf[BigWoe])
+    assert(big.states.head.isDistributed)
     val a = small.transform(df).select("cat", "w").collect()
       .map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
     val b = big.transform(df).select("cat", "w").collect()
@@ -514,7 +514,7 @@ class WoeEncoderOpSpec extends SparkSpec {
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(got.toSeq == expect.toSeq)
 
-    // online path: SmallWoe only (BigWoe is not driver-resident)
+    // online path: driver map only (a distributed lookup is refused)
     val smallOnly = DFPipeline(new WoeEncoder(Seq("cat"), Seq("w"), "y"))
       .fit(df)
     val score = OnlineScorer.compile(smallOnly)

@@ -91,7 +91,7 @@ class OperatorPropertiesSpec extends SparkSpec {
       val df = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("row_id", "c")
       val m = new ComplementLabelEncoder(Seq("c"), Seq("code")).fit(df)
-      val vocab = m.maps.head
+      val vocab = m.dicts.head.driverMap("cle")
       val distinctVals = vs.distinct
       val codes = distinctVals.map(vocab)
       val injective = codes.distinct.size == distinctVals.size
@@ -132,7 +132,7 @@ class OperatorPropertiesSpec extends SparkSpec {
       val m = new FrequencyEncoder(Seq("c"), Seq("n")).fit(df)
       // each row carries its value's count; summing 1/count per row over
       // each distinct value's rows gives exactly the distinct count
-      val counts = m.maps.head
+      val counts = m.dicts.head.driverMap("fe")
       counts.values.sum.toLong == vs.length
     })
   }
